@@ -7,8 +7,8 @@ is never redone; a crashed run resumes from the last completed stage.
 
 Iceberg would give snapshot isolation and MERGE here; this image has
 no Iceberg jars, so checkpoints are parquet tables behind the same
-API (swap ``format`` when the catalog is available — the access
-pattern is identical).
+API.  Parquet is also what the resume logic needs: it keys on the
+``_SUCCESS`` marker that only file sources write.
 """
 
 from __future__ import annotations
@@ -17,8 +17,6 @@ import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-
-CHECKPOINT_FORMAT = os.environ.get("SPARK_GRAFT_CHECKPOINT_FORMAT", "parquet")
 
 
 def _done_marker(path: str) -> str:
@@ -36,9 +34,9 @@ def checkpoint(df: DataFrame, path: str) -> DataFrame:
     rows (ADVICE r3: writers that don't bump the fence make their
     conflicts invisible to it)."""
     version = _table_version(path)
-    df.write.mode("overwrite").format(CHECKPOINT_FORMAT).save(path)
+    df.write.mode("overwrite").parquet(path)
     _write_version(path, version + 1)
-    return df.sparkSession.read.format(CHECKPOINT_FORMAT).load(path)
+    return df.sparkSession.read.parquet(path)
 
 
 def resume_or_compute(
@@ -48,7 +46,7 @@ def resume_or_compute(
     otherwise the stage runs and checkpoints. Spark's _SUCCESS marker
     is the completion flag (a partial write without it is recomputed)."""
     if os.path.exists(_done_marker(path)):
-        return spark.read.format(CHECKPOINT_FORMAT).load(path)
+        return spark.read.parquet(path)
     return checkpoint(compute(), path)
 
 
@@ -61,7 +59,7 @@ def incremental_delta(
     spark = pages.sparkSession
     if not os.path.exists(_done_marker(extracted_path)):
         return pages
-    done = spark.read.format(CHECKPOINT_FORMAT).load(extracted_path).select(key)
+    done = spark.read.parquet(extracted_path).select(key)
     return pages.join(done, key, "left_anti")
 
 
@@ -70,7 +68,7 @@ def append_increment(df: DataFrame, extracted_path: str) -> None:
     that read the table before this append must not publish a
     survivor set that drops the appended rows (ADVICE r3)."""
     version = _table_version(extracted_path)
-    df.write.mode("append").format(CHECKPOINT_FORMAT).save(extracted_path)
+    df.write.mode("append").parquet(extracted_path)
     _write_version(extracted_path, version + 1)
 
 
@@ -252,19 +250,15 @@ def merge_upsert(
     if not os.path.exists(_done_marker(path)):
         _claim_creation(path)
         try:
-            updates.write.mode("overwrite").format(
-                CHECKPOINT_FORMAT
-            ).save(path)
+            updates.write.mode("overwrite").parquet(path)
             _write_version(path, 1)
         finally:
             _release_creation(path)
         return
     read_version = _table_version(path)
-    current = spark.read.format(CHECKPOINT_FORMAT).load(path)
+    current = spark.read.parquet(path)
     survivors = current.join(updates.select(key), key, "left_anti")
-    survivors.unionByName(updates).write.mode("overwrite").format(
-        CHECKPOINT_FORMAT
-    ).save(staging)
+    survivors.unionByName(updates).write.mode("overwrite").parquet(staging)
     with open(os.path.join(staging, "_VERSION"), "w") as f:
         f.write(str(read_version + 1))
     if _TEST_BEFORE_PUBLISH is not None:

@@ -20,6 +20,8 @@ Cluster usage (north_rule launch shape):
         [--set min_text_len=10 --set link_density_max=0.5]
 
 Local smoke: spark-submit --master local[8] jobs/extract_job.py ...
+(or plain ``python jobs/extract_job.py ...``, which sizes a local
+session from the machine — see clara_ocr_spark/session.py).
 
 The job: (optionally) anti-join away already-extracted urls →
 segment → classify (+ pattern broadcast, + feedback overrides) →
@@ -35,30 +37,6 @@ import sys
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _ROOT)
-# Python workers are separate processes and resolve imports from env,
-# not the driver's sys.path: without this, running the job from any
-# cwd outside the repo dies with ModuleNotFoundError on the first
-# mapInPandas batch (same hook as session.get_spark; on a real
-# cluster --py-files ships the package instead).
-if _ROOT not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
-    os.environ["PYTHONPATH"] = (
-        _ROOT
-        + (os.pathsep + os.environ["PYTHONPATH"]
-           if os.environ.get("PYTHONPATH") else "")
-    )
-
-from pyspark.sql import SparkSession  # noqa: E402
-
-
-def build_session() -> SparkSession:
-    return (
-        SparkSession.builder.appName("clara-extract")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -435,12 +413,13 @@ def main(argv: list[str] | None = None) -> None:
         apply_feedback,
         apply_structural_acts,
     )
+    from clara_ocr_spark.session import get_spark
     from clara_ocr_spark.stages.segment import segment
 
     ExtractConfig.from_args(args.overrides)  # validate overrides early
     from clara_ocr_spark.sources.formats import read_pages_any, write_extracted
 
-    spark = build_session()
+    spark = get_spark("clara-extract")
     if args.input_format == "warc":
         from clara_ocr_spark.sources.formats import read_pages_warc
 

@@ -33,7 +33,7 @@ def main() -> int:
     names = list(qs)
     if window_only:
         names = names[: len(DRIVER_WINDOW)]
-    spark = get_spark("oracle-sweep", cores=8)
+    spark = get_spark("oracle-sweep")
     spark.sparkContext.setLogLevel("ERROR")
     con = duck_connect(sf_dir)
     failed = []

@@ -18,7 +18,7 @@ DATA_DIR = os.path.join(os.path.dirname(__file__), "..", ".data")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("clara-tests", cores=8, shuffle_partitions=8)
+    s = get_spark("clara-tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
 

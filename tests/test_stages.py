@@ -907,7 +907,7 @@ import clara_ocr_spark.plans.checkpoint as cp
 import datetime as dt
 
 path, ready_dir, tag, lo = sys.argv[1], sys.argv[2], sys.argv[3], int(sys.argv[4])
-spark = get_spark("merge-worker-" + tag, cores=2, shuffle_partitions=2)
+spark = get_spark("merge-worker-" + tag, cores=2)
 from clara_ocr_spark.stages.feedback import ACTS_SCHEMA
 rows = [(i, "u%d" % i, i, "content", "anon", dt.datetime(2024, 5, 1)) for i in range(lo, lo + 5)]
 batch = spark.createDataFrame(rows, ACTS_SCHEMA)
